@@ -674,6 +674,22 @@ class TestScrubPII:
         # @handle has no domain dot; "http://" alone never matches
         assert (got[4]["n_urls"], got[4]["n_emails"]) == (0, 0)
 
+    def test_input_column_named_like_intermediate(self, spark):
+        """A pass-through column that happens to carry the intermediate
+        struct's default name survives untouched."""
+        from xwikire_spark.operators.textstats import scrub_pii
+
+        df = spark.createDataFrame(
+            [(i, t, f"keep-{i}") for i, t in self.ROWS],
+            "doc_id int, text string, __s1 string",
+        )
+        got = {r["doc_id"]: r for r in scrub_pii(df).collect()}
+        assert {d: r["__s1"] for d, r in got.items()} == {
+            i: f"keep-{i}" for i, _ in self.ROWS
+        }
+        assert (got[3]["n_urls"], got[3]["n_emails"]) == (2, 1)
+        assert got[3]["text"] == "two urls <URL> <URL> one mail <EMAIL>"
+
     def test_plan_is_single_projection(self, spark):
         from xwikire_spark.operators.textstats import scrub_pii
 

@@ -20,7 +20,11 @@ from xwikire_spark.pipeline.extraction import (
     detect_mentions,
     segment_turns,
 )
-from xwikire_spark.pipeline.manifests import pending_buckets, run_with_manifests
+from xwikire_spark.pipeline.manifests import (
+    bucket_fingerprints,
+    pending_buckets,
+    run_with_manifests,
+)
 
 TRIPLE_KEY = ["conv_id", "subj", "pred", "obj", "turn_idx", "sent_idx",
               "evidence", "id"]
@@ -406,6 +410,85 @@ class TestManifests:
         )
         assert key_set(sn.read_table(spark, root, version=1)) == v1_keys
 
+    @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+    def test_one_file_per_bucket_and_manifest_rows(
+        self, spark, corpus, tmp_path, table_format
+    ):
+        """The clustered write leaves one file per bucket even when the
+        build ends in several partitions, and the manifest rows agree
+        with the written table and with a fresh fingerprint."""
+        import os
+
+        _, _, transcripts, alias_df, pred_df = corpus
+        out = str(tmp_path / f"kg_{table_format}")
+        n_buckets = 4
+
+        def build(df):
+            return extract_triples(df, alias_df, pred_df).repartition(3)
+
+        table = run_with_manifests(
+            spark, transcripts, build, out, n_buckets,
+            table_format=table_format,
+        )
+        files: dict[str, int] = {}
+        for d, _, names in os.walk(os.path.join(out, "triples")):
+            if os.path.basename(d).startswith("part_bucket="):
+                files[d] = sum(n.endswith(".parquet") for n in names)
+        assert files and set(files.values()) == {1}, files
+
+        per_bucket = {
+            r["part_bucket"]: r["count"]
+            for r in table.groupBy("part_bucket").count().collect()
+        }
+        assert len(files) == len(per_bucket)
+        manifest = {
+            r["bucket"]: r
+            for r in spark.read.parquet(out + "/_manifests").collect()
+        }
+        assert sum(r["triples_out"] for r in manifest.values()) \
+            == table.count() > 0
+        for b, r in manifest.items():
+            assert r["triples_out"] == per_bucket.get(b, 0), b
+        fresh = {
+            r["part_bucket"]: r
+            for r in bucket_fingerprints(transcripts, n_buckets).collect()
+        }
+        assert set(manifest) == set(fresh)
+        for b, r in fresh.items():
+            got = manifest[b]
+            assert (got["convs_in"], got["rows_in"], got["input_hash"]) \
+                == (r["convs_in"], r["rows_in"], r["input_hash"]), b
+
+    def test_session_overwrite_mode_untouched(self, spark, corpus, tmp_path):
+        """Dynamic overwrite is a per-write option: the caller's session
+        keeps its static mode, and the resume still replaces only the
+        drifted bucket."""
+        _, _, transcripts, alias_df, pred_df = corpus
+        out = str(tmp_path / "kg_conf")
+        key = "spark.sql.sources.partitionOverwriteMode"
+
+        def build(df):
+            return extract_triples(df, alias_df, pred_df)
+
+        spark.conf.set(key, "STATIC")
+        try:
+            run_with_manifests(spark, transcripts, build, out, 4)
+            drifted = transcripts.withColumn(
+                "text",
+                F.when(
+                    F.col("conv_id") == "conv-00000",
+                    F.concat(F.col("text"), F.lit(" Einstein married Curie.")),
+                ).otherwise(F.col("text")),
+            )
+            merged = run_with_manifests(spark, drifted, build, out, 4)
+            assert spark.conf.get(key) == "STATIC"
+        finally:
+            spark.conf.unset(key)
+        cols = ["conv_id", "subj", "pred", "obj"]
+        assert {tuple(r) for r in merged.select(*cols).collect()} == {
+            tuple(r) for r in build(drifted).select(*cols).collect()
+        }
+
 
 class TestGraphMaterialization:
     def test_edges_vertices_and_metrics(self, spark, corpus, tmp_path):
@@ -558,7 +641,7 @@ class TestMentionPathEquivalence:
 class TestPageRank:
     """pipeline.graph.pagerank vs an independent numpy power iteration
     on a pinned graph exercising every structural case: hub, chain,
-    dangling vertex, isolated vertex, 2-cycle."""
+    dangling vertex, isolated vertex, 2-cycle, parallel multi-edges."""
 
     EDGES = [
         ("a", "b"), ("a", "c"), ("a", "d"),   # hub fan-out
@@ -566,6 +649,7 @@ class TestPageRank:
         ("d", "a"),                           # cycle back
         ("e", "a"),                           # feeder
         ("c", "f"),                           # f is DANGLING (no out)
+        ("a", "b"), ("a", "b"), ("c", "d"),   # MULTI-EDGES (cnt 3 and 2)
         # g is ISOLATED (only via explicit vertices)
     ]
     VERTS = list("abcdefg")
@@ -618,7 +702,9 @@ class TestPageRank:
 
         from xwikire_spark.pipeline.graph import entity_salience
 
-        convs = ["c1", "c2", "c1", "c2", "c1", "c2", "c1", "c1"]
+        convs = ["c1", "c2", "c1", "c2", "c1", "c2", "c1", "c1", "c2", "c1",
+                 "c2"]
+        assert len(convs) == len(self.EDGES)
         triples = spark.createDataFrame(
             pd.DataFrame(
                 [(s, "related_to", o, c)

@@ -15,7 +15,8 @@ variant) — labels converge in O(log n) rounds on real alias graphs:
     until no label changes
 
 Scale notes:
-- edges are symmetrized once so each round is ONE shuffle join;
+- edges are symmetrized and localCheckpoint()ed once, so each round is
+  ONE shuffle join and never re-derives the edge list;
 - hot vertices (an alias shared by thousands of entities would create a
   high-degree node) are salted: the neighbor-min aggregation first combines
   per (vertex, salt) partial mins, then per vertex — the classic two-phase
@@ -76,10 +77,13 @@ def connected_components(
     O(diameter) — a 64-node chain would need 63 rounds; (b) halves label
     chains each round, giving the O(log n) bound (verified by the chain
     test in tests/test_operators.py)."""
-    # symmetrize once: each undirected edge contributes both directions
+    # symmetrize once: each undirected edge contributes both directions.
+    # Materialized before the loop: every round joins it, and an upstream
+    # like collision_edges (distinct, window, self-join, distinct) would
+    # otherwise re-execute inside each round's join.
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    ).localCheckpoint()
     labels = vertices.select(
         F.col("id"), F.col("id").alias("component")
     ).localCheckpoint()

@@ -85,10 +85,9 @@ def materialize_graph(
             spark, v_root, vertices, partition_col="part_bucket"
         )
         return edges, snapmod.read_table(spark, v_root)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    vertices.write.mode("overwrite").partitionBy("part_bucket").parquet(
-        v_root
-    )
+    vertices.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("part_bucket").parquet(v_root)
     return edges, spark.read.parquet(v_root)
 
 

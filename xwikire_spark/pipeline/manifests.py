@@ -70,12 +70,9 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
-def pending_buckets(
-    spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
-) -> list[int]:
-    """Buckets not yet present in the manifest (or whose input changed) —
-    the resume anti-join (J8 / src/scripts/extract_unprocessed.py:20-45)."""
-    fp = bucket_fingerprints(transcripts, n_buckets)
+def _pending(spark: SparkSession, fp: DataFrame, out_dir: str) -> list[int]:
+    """Buckets of ``fp`` absent from the manifest, or whose input_hash
+    changed since they were recorded."""
     done = read_manifest(spark, out_dir).select(
         F.col("bucket").alias("part_bucket"), "input_hash"
     )
@@ -83,6 +80,16 @@ def pending_buckets(
         done, ["part_bucket", "input_hash"], "left_anti"
     ).select("part_bucket")
     return sorted(r[0] for r in pending.collect())
+
+
+def pending_buckets(
+    spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
+) -> list[int]:
+    """Buckets not yet present in the manifest (or whose input changed) —
+    the resume anti-join (J8 / src/scripts/extract_unprocessed.py:20-45)."""
+    return _pending(
+        spark, bucket_fingerprints(transcripts, n_buckets), out_dir
+    )
 
 
 def run_with_manifests(
@@ -94,12 +101,20 @@ def run_with_manifests(
     zone_map_cols: list[str] | None = None,
     table_format: str = "parquet",
 ) -> DataFrame:
-    """Run ``build_fn(transcripts_subset) -> triples`` bucket-group-wise with
-    resume. Returns the full output (all buckets) read back from disk.
+    """Run ``build_fn(transcripts_subset) -> triples`` over the pending
+    buckets with resume. Returns the full output (all buckets) read back
+    from disk.
 
-    Buckets are processed in a handful of *groups* (not one job per bucket —
-    at 10^12 rows a per-bucket job would underutilize the cluster; a group
-    is one job whose tasks span many buckets).
+    All pending buckets go through ONE build and ONE clustered write: the
+    output is rebalanced on ``part_bucket`` before the write, so each
+    bucket is written by one task and every batch leaves one file per
+    bucket. This is Iceberg's ``write.distribution-mode=hash`` (the
+    layout ``sources.bucketing`` targets); a plain hash repartition would
+    send a hot bucket to one reducer, whereas the rebalance lets AQE split
+    a skewed bucket into several files. Without the clustering every
+    write task would open a file in every bucket it saw: tasks × buckets
+    small files. The transcripts are fingerprinted once per call; that
+    one result drives both the resume anti-join and the manifest rows.
 
     ``zone_map_cols``: when set, ``sources.zonemaps.refresh_zone_maps``
     runs after the bucket write, statting ONLY the files this run added
@@ -121,99 +136,103 @@ def run_with_manifests(
     if snap:
         from xwikire_spark.sources import snapshots as snapmod
     triples_root = os.path.join(out_dir, "triples")
-    todo = pending_buckets(spark, transcripts, out_dir, n_buckets)
-    bucketed = with_bucket(transcripts, n_buckets)
-    fp = bucket_fingerprints(transcripts, n_buckets)
-
-    if todo:
-        from pyspark.sql import Observation
-
-        t0 = time.time()
-        subset = bucketed.where(F.col("part_bucket").isin(todo))
-        triples = build_fn(subset.drop("part_bucket"))
-        out = with_bucket(triples, n_buckets)
-        # quality metrics ride the WRITE job itself via observe() — zero
-        # extra passes (the reference returned per-chunk stats dicts to the
-        # driver, src/builders/builder.py:45-48; this is the Spark-native
-        # equivalent)
-        obs = Observation("kg_quality")
-        cols = set(out.columns)
-        metric_exprs = [F.count(F.lit(1)).alias("triples_out")]
-        for c, name in (("conv_id", "approx_convs"),
-                        ("subj", "approx_subjects"),
-                        ("obj", "approx_objects")):
-            if c in cols:
-                metric_exprs.append(F.approx_count_distinct(c).alias(name))
-        if "evidence" in cols:
-            metric_exprs.append(
-                F.sum(
-                    F.when(F.length(F.trim("evidence")) == 0, 1).otherwise(0)
-                ).alias("empty_evidence")
-            )
-        out = out.observe(obs, *metric_exprs)
+    # n_buckets rows: materialized once, read by the anti-join below and
+    # by the manifest rows after the write — without it the second use
+    # re-scans and re-aggregates the transcripts
+    fp = bucket_fingerprints(transcripts, n_buckets).localCheckpoint()
+    todo = _pending(spark, fp, out_dir)
+    if not todo:
         if snap:
-            # one atomic versioned commit per resume batch; a drifted
-            # bucket's files fall out of the new manifest (old versions
-            # keep them — time travel), so reprocess is idempotent
-            snapmod.commit_replace_partitions(
-                spark, triples_root, out, "part_bucket"
-            )
-        else:
-            # dynamic partition overwrite: reprocessing a drifted bucket
-            # replaces its files instead of appending duplicates — resume
-            # is idempotent.
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            out.write.mode("overwrite").partitionBy("part_bucket").parquet(
-                triples_root
-            )
-        wall_ms = int((time.time() - t0) * 1000)
-        # aggregates over a zero-row write observe NULL (e.g. the sum) —
-        # coalesce to 0 and pin the schema or createDataFrame fails type
-        # inference on the all-None row
-        metrics = {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
-        metrics["wall_ms"] = wall_ms
-        metrics["n_buckets_processed"] = len(todo)
-        metrics_schema = ", ".join(f"{k} bigint" for k in metrics)
-        spark.createDataFrame([tuple(metrics.values())], metrics_schema)\
-            .write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
+            return snapmod.read_table(spark, triples_root)
+        return spark.read.parquet(triples_root)
 
-        # count from the just-written files, NOT the build DataFrame —
-        # re-aggregating `out` would recompute the whole extraction
-        # (including the Python kernel) a second time. Snapshot mode plans
-        # ONLY the todo buckets' files (manifest partition pruning).
-        written = (
-            snapmod.read_table(spark, triples_root, partitions=todo)
-            if snap
-            else spark.read.parquet(triples_root).where(
-                F.col("part_bucket").isin(todo)
-            )
-        )
-        counts = (
-            written
-            .groupBy(F.col("part_bucket").cast("bigint").alias("part_bucket"))
-            .agg(F.count(F.lit(1)).alias("triples_out"))
-        )
-        manifest_rows = (
-            fp.where(F.col("part_bucket").isin(todo))
-            .join(counts, "part_bucket", "left")
-            .select(
-                F.col("part_bucket").alias("bucket"),
-                "convs_in",
-                "rows_in",
-                F.coalesce("triples_out", F.lit(0)).alias("triples_out"),
-                "input_hash",
-                F.lit(wall_ms).alias("wall_ms"),
-            )
-        )
-        manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
+    from pyspark.sql import Observation
 
-        if zone_map_cols:
-            from xwikire_spark.sources.zonemaps import refresh_zone_maps
+    t0 = time.time()
+    subset = with_bucket(transcripts, n_buckets).where(
+        F.col("part_bucket").isin(todo)
+    )
+    triples = build_fn(subset.drop("part_bucket"))
+    out = with_bucket(triples, n_buckets)
+    # quality metrics ride the WRITE job itself via observe() — zero
+    # extra passes (the reference returned per-chunk stats dicts to the
+    # driver, src/builders/builder.py:45-48; this is the Spark-native
+    # equivalent)
+    obs = Observation("kg_quality")
+    cols = set(out.columns)
+    metric_exprs = [F.count(F.lit(1)).alias("triples_out")]
+    for c, name in (("conv_id", "approx_convs"),
+                    ("subj", "approx_subjects"),
+                    ("obj", "approx_objects")):
+        if c in cols:
+            metric_exprs.append(F.approx_count_distinct(c).alias(name))
+    if "evidence" in cols:
+        metric_exprs.append(
+            F.sum(
+                F.when(F.length(F.trim("evidence")) == 0, 1).otherwise(0)
+            ).alias("empty_evidence")
+        )
+    out = out.observe(obs, *metric_exprs).hint("rebalance", "part_bucket")
+    if snap:
+        # one atomic versioned commit per resume batch; a drifted
+        # bucket's files fall out of the new manifest (old versions
+        # keep them — time travel), so reprocess is idempotent
+        snapmod.commit_replace_partitions(
+            spark, triples_root, out, "part_bucket"
+        )
+    else:
+        # dynamic partition overwrite: reprocessing a drifted bucket
+        # replaces its files instead of appending duplicates — resume
+        # is idempotent. A per-write option, so the caller's session
+        # keeps its own overwrite mode.
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("part_bucket").parquet(triples_root)
+    wall_ms = int((time.time() - t0) * 1000)
+    # aggregates over a zero-row write observe NULL (e.g. the sum) —
+    # coalesce to 0 and pin the schema or createDataFrame fails type
+    # inference on the all-None row
+    metrics = {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
+    metrics["wall_ms"] = wall_ms
+    metrics["n_buckets_processed"] = len(todo)
+    metrics_schema = ", ".join(f"{k} bigint" for k in metrics)
+    spark.createDataFrame([tuple(metrics.values())], metrics_schema)\
+        .write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
 
-            refresh_zone_maps(spark, triples_root, zone_map_cols)
+    # count from the just-written files, NOT the build DataFrame —
+    # re-aggregating `out` would recompute the whole extraction
+    # (including the Python kernel) a second time. Snapshot mode plans
+    # ONLY the todo buckets' files (manifest partition pruning); parquet
+    # mode lists the table once and returns that same DataFrame.
+    if snap:
+        written = snapmod.read_table(spark, triples_root, partitions=todo)
+    else:
+        table = spark.read.parquet(triples_root)
+        written = table.where(F.col("part_bucket").isin(todo))
+    counts = (
+        written
+        .groupBy(F.col("part_bucket").cast("bigint").alias("part_bucket"))
+        .agg(F.count(F.lit(1)).alias("triples_out"))
+    )
+    manifest_rows = (
+        fp.where(F.col("part_bucket").isin(todo))
+        .join(counts, "part_bucket", "left")
+        .select(
+            F.col("part_bucket").alias("bucket"),
+            "convs_in",
+            "rows_in",
+            F.coalesce("triples_out", F.lit(0)).alias("triples_out"),
+            "input_hash",
+            F.lit(wall_ms).alias("wall_ms"),
+        )
+    )
+    manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
+
+    if zone_map_cols:
+        from xwikire_spark.sources.zonemaps import refresh_zone_maps
+
+        refresh_zone_maps(spark, triples_root, zone_map_cols)
 
     if snap:
         return snapmod.read_table(spark, triples_root)
-    return spark.read.parquet(triples_root)
+    return table

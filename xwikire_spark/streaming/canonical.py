@@ -180,10 +180,11 @@ def apply_alias_batch(
     fresh = fresh.localCheckpoint()
     n_fresh = fresh.count()
     n_remap = remap_delta.count()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fresh.withColumn("batch_id", F.lit(batch_id)).write.mode(
         "overwrite"
-    ).partitionBy("batch_id").parquet(new_p)
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "batch_id"
+    ).parquet(new_p)
     old_remap = _read_or_empty(spark, remap_p, REMAP_SCHEMA)
     composed = _compose_remap(old_remap, remap_delta)
     # materialize BEFORE the swap (composed scans the remap table it is

@@ -161,10 +161,11 @@ def run_incremental_dedup(
         pairs, new_sigs, new_banded = incremental_minhash_dedup_banded(
             corpus, banded, known, new_docs, threshold=threshold
         )
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "overwrite"
-        ).partitionBy("batch_id").parquet(pairs_dir)
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "batch_id"
+        ).parquet(pairs_dir)
         # the operator already computed the deltas — persist them, don't
         # re-derive fresh and re-hash the batch a second time
         new_banded.withColumn("bh_part", bh_part_expr()).write.mode(
