@@ -1040,37 +1040,21 @@ def q_kg_canonical_map(spark, sf_dir):
     one component; canonical id = lexicographic min brand. Spark side runs
     the iterative salted min-label propagation from pipeline/canonicalize;
     the DuckDB oracle is a WITH RECURSIVE reachability min."""
-    from xwikire_spark.pipeline.canonicalize import connected_components
+    from xwikire_spark.pipeline.canonicalize import (
+        collision_edges,
+        connected_components,
+    )
 
     p = _load(spark, sf_dir, "part")
-    # r7 (guide §2.4, same pattern as kg_triangles/LSH buckets): ONE hash
-    # aggregate per token collects the distinct brand set (partial
-    # combine collapses duplicates map-side), the >1000-fanout stop guard
-    # (mirrored in the oracle) filters on set size, and brand pairs
-    # expand in-row — replacing the old distinct-shuffle + per-token
-    # count window + bucket self-join + pair distinct chain.
-    toks = p.select(
-        F.col("p_brand").alias("brand"),
-        F.explode(F.split("p_name", " ")).alias("tok"),
-    )
-    buckets = (
-        toks.groupBy("tok")
-        .agg(F.array_sort(F.collect_set("brand")).alias("brands"))
-        .where(F.size("brands") <= 1000)
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("brands"),
-            lambda x, i: F.transform(
-                F.slice(F.col("brands"), i + 2, F.size(F.col("brands"))),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    edges = (
-        buckets.select(F.explode(pair_arr).alias("e"))
-        .select(F.col("e.src"), F.col("e.dst"))
-        .distinct()
+    # the pipeline's own collision-edge builder (one aggregate per token,
+    # in-row pair expansion, the >1000-fanout stop guard mirrored in the
+    # oracle) over (token, brand) as (alias, entity_id)
+    edges = collision_edges(
+        p.select(
+            F.explode(F.split("p_name", " ")).alias("alias"),
+            F.col("p_brand").alias("entity_id"),
+        ),
+        max_bucket=1000,
     )
     vertices = p.select(F.col("p_brand").alias("id")).distinct()
     cc = connected_components(vertices, edges)

@@ -623,3 +623,35 @@ class TestSnapshotPartitioned:
         assert self._rows(one) == self._rows(
             after.where(F.col("bucket") == 1)
         )
+
+
+class TestPartitionListing:
+    def test_listing_fans_out_at_most_shuffle_partitions(
+        self, spark, tmp_path
+    ):
+        """Reading a table with more partition directories than Spark's
+        parallel-listing threshold (32) lists them in one job whose stages
+        run at most spark.sql.shuffle.partitions tasks — not one task per
+        directory."""
+        from pyspark.sql import functions as F
+
+        root = str(tmp_path / "t")
+        spark.range(640).withColumn("part_bucket", F.col("id") % 64)\
+            .write.partitionBy("part_bucket").parquet(root)
+        sc = spark.sparkContext
+        group = "listing-fan-out"
+        sc.setJobGroup(group, "list a 64-bucket table")
+        try:
+            table = spark.read.parquet(root)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert table.count() == 640
+        st = sc.statusTracker()
+        stages = [
+            st.getStageInfo(s)
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+        ]
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        tasks = [s.numTasks for s in stages if s is not None]
+        assert tasks and max(tasks) <= cap, (tasks, cap)

@@ -223,7 +223,9 @@ class TestVocabAndSplits:
         hot = [{"alias": "the company", "entity_id": f"Q{i}"}
                for i in range(50)]
         cold = [{"alias": "acme", "entity_id": q} for q in ("Q1", "Q2")]
-        df = spark.createDataFrame(pd.DataFrame(hot + cold))
+        # rows without a surface connect nothing
+        bare = [{"alias": None, "entity_id": q} for q in ("Q3", "Q4")]
+        df = spark.createDataFrame(pd.DataFrame(hot + cold + bare))
         edges = collision_edges(df, max_bucket=10).collect()
         assert {(r.src, r.dst) for r in edges} == {("Q1", "Q2")}
 
@@ -264,6 +266,21 @@ class TestConnectedComponentsSkew:
         cc = {r.id: r.component
               for r in connected_components(vertices, edges).collect()}
         assert set(cc.values()) == {"N000"}
+
+    def test_endpoints_outside_vertex_set_stay_out(self, spark):
+        """Only the supplied vertices get labels: an edge endpoint absent
+        from the vertex frame neither appears in the output nor lowers a
+        label through the edge it sits on."""
+        import pandas as pd
+
+        from xwikire_spark.pipeline.canonicalize import connected_components
+
+        vertices = spark.createDataFrame(pd.DataFrame({"id": ["b", "c"]}))
+        edges = spark.createDataFrame(pd.DataFrame({
+            "src": ["b", "a", "c"], "dst": ["c", "b", "z"]}))
+        cc = sorted(map(tuple, connected_components(vertices, edges)
+                        .collect()))
+        assert cc == [("b", "b"), ("c", "b")]
 
 
 class TestSessionFold:

@@ -23,6 +23,7 @@ from xwikire_spark.pipeline.extraction import (
 from xwikire_spark.pipeline.manifests import (
     bucket_fingerprints,
     pending_buckets,
+    read_manifest,
     run_with_manifests,
 )
 
@@ -340,14 +341,60 @@ class TestManifests:
         )
         todo = pending_buckets(spark, drifted, out, n_buckets)
         assert len(todo) == 1
+
+        def key_set(df):
+            return {tuple(r) for r in
+                    df.select("conv_id", "subj", "pred", "obj").collect()}
+
         merged = run_with_manifests(spark, drifted, build, out, n_buckets)
         # result equals a from-scratch run on the drifted input
-        fresh = extract_triples(drifted, alias_df, pred_df)
-        got = {tuple(r) for r in
-               merged.select("conv_id", "subj", "pred", "obj").collect()}
-        want = {tuple(r) for r in
-                fresh.select("conv_id", "subj", "pred", "obj").collect()}
-        assert got == want
+        assert key_set(merged) == key_set(
+            extract_triples(drifted, alias_df, pred_df))
+        # revert to the original input: an older manifest row still
+        # matches its hash, but only the bucket's latest row decides, so
+        # the bucket is rebuilt and the drifted triples leave the table
+        assert pending_buckets(spark, transcripts, out, n_buckets) == todo
+        reverted = run_with_manifests(spark, transcripts, build, out,
+                                      n_buckets)
+        assert key_set(reverted) == key_set(
+            extract_triples(transcripts, alias_df, pred_df))
+        assert pending_buckets(spark, transcripts, out, n_buckets) == []
+        batches = sorted(
+            r["batch"] for r in spark.read.parquet(out + "/_manifests")
+            .where(F.col("bucket") == todo[0]).collect()
+        )
+        assert batches == [1, 2, 3]
+
+    def test_unreadable_manifest_raises(self, spark, corpus, tmp_path):
+        """Only a missing _manifests directory means "nothing done yet";
+        an unreadable one fails the run instead of silently reprocessing
+        every bucket."""
+        _, _, transcripts, alias_df, pred_df = corpus
+        out = tmp_path / "kg_bad"
+        (out / "_manifests").mkdir(parents=True)
+        (out / "_manifests" / "rows.parquet").write_text("not parquet")
+
+        def build(df):
+            return extract_triples(df, alias_df, pred_df)
+
+        with pytest.raises(Exception, match="rows.parquet"):
+            run_with_manifests(spark, transcripts, build, str(out), 4)
+        assert not (out / "triples").exists()
+        # a listing that fails before any file is read (conflicting
+        # partition directories) propagates too, rather than reading as
+        # an empty manifest
+        mixed = tmp_path / "kg_mixed" / "_manifests"
+        for part in ("a=1", "b=2"):
+            (mixed / part).mkdir(parents=True)
+            spark.createDataFrame([(1,)], "x INT").toPandas().to_parquet(
+                mixed / part / "rows.parquet")
+        with pytest.raises(Exception, match="(?i)conflicting"):
+            run_with_manifests(spark, transcripts, build,
+                               str(mixed.parent), 4)
+        assert not (mixed.parent / "triples").exists()
+        empty = tmp_path / "kg_none"
+        assert read_manifest(spark, str(empty)).count() == 0
+        assert len(pending_buckets(spark, transcripts, str(empty), 4)) == 4
 
     def test_snapshot_mode_matches_parquet_and_time_travels(
         self, spark, corpus, tmp_path

@@ -44,24 +44,35 @@ def collision_edges(
     """Edges between entity_ids sharing a surface (undirected, deduped).
     Output: src, dst with src < dst.
 
+    ONE hash aggregate per surface collects its sorted distinct entity
+    set (the partial combine collapses duplicates map-side), and the
+    pairs expand in-row from that array; a final distinct merges pairs
+    that several surfaces share. Two exchanges in all.
+
     ``max_bucket`` drops surfaces shared by more than that many entities
-    BEFORE the self-join — one hot alias otherwise contributes O(n²) edges
-    and a single skewed join bucket. Real synonym clusters still connect
-    through their specific (low-fanout) surfaces."""
-    base = alias_dict.select("alias", "entity_id").distinct()
-    sized = (
-        base.withColumn(
-            "_n", F.count(F.lit(1)).over(Window.partitionBy("alias"))
-        )
-        .where(F.col("_n") <= max_bucket)
-        .drop("_n")
+    BEFORE the pairs expand — one hot alias otherwise contributes O(n²)
+    edges. Real synonym clusters still connect through their specific
+    (low-fanout) surfaces. Null entity_ids neither form edges nor count
+    toward a surface's fan-out, and a null surface is shared by nothing."""
+    buckets = (
+        alias_dict.where(F.col("alias").isNotNull())
+        .groupBy("alias")
+        .agg(F.array_sort(F.collect_set("entity_id")).alias("ids"))
+        .where(F.size("ids") <= max_bucket)
     )
-    a = sized.select("alias", F.col("entity_id").alias("src"))
-    b = sized.select("alias", F.col("entity_id").alias("dst"))
+    ids = F.col("ids")
+    pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("src"), y.alias("dst")),
+            ),
+        )
+    )
     return (
-        a.join(b, "alias")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
+        buckets.select(F.explode(pairs).alias("e"))
+        .select("e.src", "e.dst")
         .distinct()
     )
 
@@ -77,9 +88,11 @@ def connected_components(
     O(diameter) — a 64-node chain would need 63 rounds; (b) halves label
     chains each round, giving the O(log n) bound (verified by the chain
     test in tests/test_operators.py)."""
+    from pyspark.sql import Observation
+
     # symmetrize once: each undirected edge contributes both directions.
     # Materialized before the loop: every round joins it, and an upstream
-    # like collision_edges (distinct, window, self-join, distinct) would
+    # like collision_edges (aggregate, pair expansion, distinct) would
     # otherwise re-execute inside each round's join.
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -87,49 +100,59 @@ def connected_components(
     labels = vertices.select(
         F.col("id"), F.col("id").alias("component")
     ).localCheckpoint()
+    id_type = labels.schema["id"].dataType
 
     for _ in range(max_iter):
-        # (a) neighbor labels: join edge.src -> label(src), propose to dst.
-        # Salted two-phase min keeps hot vertices from serializing a single
-        # reducer: partial min per (dst, salt), then final min.
-        proposals = (
-            sym.join(labels, sym.src == labels.id)
-            .select(
-                F.col("dst").alias("id"),
-                F.col("component"),
-                (F.crc32(F.col("src")) % N_SALTS).alias("salt"),
-            )
-            .groupBy("id", "salt")
-            .agg(F.min("component").alias("component"))
-            .groupBy("id")
-            .agg(F.min("component").alias("neighbor_min"))
+        # (a) min over the vertex's own label and its neighbors' labels.
+        # The own label joins the aggregate as one more proposal (carrying
+        # the pre-round label as `prev`, so convergence needs no join-back
+        # against `labels`); every vertex proposes to itself, so no left
+        # join re-attaches vertices without neighbors, and the `own` flag
+        # drops edge endpoints outside the vertex set, as that join did.
+        # Salted two-phase min keeps hot vertices from serializing a
+        # single reducer: partial min per (id, salt), then final min per id.
+        proposals = sym.join(labels, sym.src == labels.id).select(
+            F.col("dst").alias("id"),
+            F.col("component"),
+            F.lit(None).cast(id_type).alias("prev"),
+            F.lit(False).alias("own"),
+            (F.crc32(F.col("src")) % N_SALTS).alias("salt"),
         )
-        stepped = labels.join(proposals, "id", "left").select(
-            "id",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("neighbor_min"), F.col("component")),
-            ).alias("new_component"),
-            # carry the pre-iteration label so convergence needs no
-            # join-back against `labels`
-            F.col("component").alias("prev"),
+        own = labels.select(
+            "id", "component", F.col("component").alias("prev"),
+            F.lit(True).alias("own"), F.lit(0).cast("bigint").alias("salt"),
+        )
+        stepped = (
+            proposals.unionByName(own)
+            .groupBy("id", "salt")
+            .agg(F.min("component").alias("component"),
+                 F.min("prev").alias("prev"), F.max("own").alias("own"))
+            .groupBy("id")
+            .agg(F.min("component").alias("new_component"),
+                 F.min("prev").alias("prev"), F.max("own").alias("own"))
+            .where("own")
+            .drop("own")
         )
         # (b) pointer jump: component := label(component). label(c) <= c is
         # invariant (labels only decrease, starting at the id itself), so
-        # the jump never increases a label.
+        # the jump never increases a label. Both sides of this self-join
+        # must plan identically for AQE to reuse the aggregate's shuffle
+        # stages instead of running them twice: the parent side reads
+        # `prev` as well (least(...) == new_component, since the own
+        # label is among the mins), and the null-safe key keeps Catalyst
+        # from inferring an isnotnull filter on the parent side only.
         parent = stepped.select(
-            F.col("id").alias("new_component"),
-            F.col("new_component").alias("grand"),
+            F.col("id").alias("pid"),
+            F.least("new_component", "prev").alias("grand"),
         )
-        # Convergence count rides the checkpoint job via observe() —
-        # ONE Spark job per iteration (was: checkpoint job + a separate
-        # count job joining new vs old labels). Labels only decrease, so
+        # Convergence count rides the checkpoint via observe(), so it
+        # costs no job of its own. Labels only decrease, so
         # component != prev identifies every change.
-        from pyspark.sql import Observation
-
         obs = Observation()
         jumped = (
-            stepped.join(parent, "new_component", "left")
+            stepped.join(
+                parent, stepped.new_component.eqNullSafe(parent.pid), "left"
+            )
             .select(
                 "id",
                 F.coalesce(F.col("grand"), F.col("new_component")).alias(

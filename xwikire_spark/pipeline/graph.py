@@ -191,6 +191,24 @@ def pagerank(
     e = edges.select("src", "dst")
     from pyspark.sql import Observation
 
+    if vertices is not None:
+        # validated before the edge aggregate below is materialized, so
+        # the error path costs one anti-join and no full aggregate; the
+        # distinct runs over the missing endpoints only
+        missing = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .join(vertices.select("id"), "id", "left_anti")
+            .distinct()
+            .count()
+        )
+        if missing:
+            raise ValueError(
+                f"pagerank: {missing} edge endpoint(s) absent from the"
+                " supplied vertices frame; vertices must be a superset of"
+                " edge endpoints or rank mass leaks every iteration"
+            )
+
     # r7 init merge: ONE aggregate derives the endpoint vertex set AND
     # out-degrees (the old init ran a separate endpoints-distinct, an
     # out-degree aggregate and a vertex left-join, checkpointed the
@@ -222,15 +240,6 @@ def pagerank(
         .agg(F.sum("c").alias("out_deg"))
     )
     if vertices is not None:
-        missing = deg_all.select("id").join(
-            vertices.select("id"), "id", "left_anti"
-        ).count()
-        if missing:
-            raise ValueError(
-                f"pagerank: {missing} edge endpoint(s) absent from the"
-                " supplied vertices frame; vertices must be a superset of"
-                " edge endpoints or rank mass leaks every iteration"
-            )
         deg_all = vertices.select("id").join(deg_all, "id", "left")
     vobs = Observation()
     dv = (

@@ -9,13 +9,16 @@ redid everything. Here:
   so re-runs see the same partition ids (the reference's id-sorted chunking,
   src/utils/utils.py:36-47, made deterministic);
 - outputs land under ``out/part_bucket=<k>/``; a manifest row
-  (bucket, convs_in, rows_in, triples_out, input_hash) is appended after
-  each bucket's files commit;
-- resume = anti-join the input's buckets against the manifest's buckets
-  (J8) and process only the remainder — idempotent because bucket contents
-  are a pure function of conv_id;
-- ``input_hash`` (order-insensitive sum of per-row hashes) detects silent
-  input drift: a bucket whose hash changed is reprocessed.
+  (bucket, convs_in, rows_in, triples_out, input_hash, wall_ms, batch) is
+  appended after each bucket's files commit; ``batch`` numbers the resume
+  calls that wrote rows (1, 2, ...);
+- resume is planned on the driver: the input's per-bucket fingerprints
+  (at most n_buckets rows) and the latest manifest row per bucket are
+  collected, and the pending buckets are their set difference (J8) —
+  idempotent because bucket contents are a pure function of conv_id;
+- ``input_hash`` (order-insensitive xor of per-row hashes) detects silent
+  input drift: a bucket whose hash differs from its LATEST manifest row is
+  reprocessed, so an input that reverts to an earlier state is rebuilt too.
 
 At 10^12 turns: buckets are the unit of retry/backfill; choose n_buckets so
 one bucket ≈ one executor-hour. Quality counters ride on ``observe()``.
@@ -26,12 +29,16 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# ``batch`` was added after the other columns; rows written before it read
+# back as NULL and rank as batch 0, older than any numbered batch.
 MANIFEST_SCHEMA = (
     "bucket BIGINT, convs_in BIGINT, rows_in BIGINT, triples_out BIGINT, "
-    "input_hash BIGINT, wall_ms BIGINT"
+    "input_hash BIGINT, wall_ms BIGINT, batch BIGINT"
 )
 
 
@@ -62,34 +69,85 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifests")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = _manifest_path(out_dir)
+def _manifest_or_none(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The manifest table, or None before the first batch commits. Only a
+    missing path means "nothing recorded": any other failure (an
+    unreadable file, a listing error) propagates, since treating it as an
+    empty manifest would silently reprocess every bucket."""
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(
+            _manifest_path(out_dir)
+        )
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
-def _pending(spark: SparkSession, fp: DataFrame, out_dir: str) -> list[int]:
-    """Buckets of ``fp`` absent from the manifest, or whose input_hash
-    changed since they were recorded."""
-    done = read_manifest(spark, out_dir).select(
-        F.col("bucket").alias("part_bucket"), "input_hash"
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    m = _manifest_or_none(spark, out_dir)
+    return m if m is not None else spark.createDataFrame([], MANIFEST_SCHEMA)
+
+
+def _recorded(spark: SparkSession, out_dir: str) -> tuple[dict[int, int], int]:
+    """-> ({bucket: input_hash of its latest manifest row}, largest batch
+    recorded). One aggregate collected to the driver (at most n_buckets
+    rows), and no Spark job at all when the manifest does not exist."""
+    m = _manifest_or_none(spark, out_dir)
+    if m is None:
+        return {}, 0
+    rows = (
+        m.groupBy("bucket")
+        .agg(
+            F.max(
+                F.struct(
+                    F.coalesce("batch", F.lit(0)).alias("batch"), "input_hash"
+                )
+            ).alias("last")
+        )
+        .collect()
     )
-    pending = fp.join(
-        done, ["part_bucket", "input_hash"], "left_anti"
-    ).select("part_bucket")
-    return sorted(r[0] for r in pending.collect())
+    latest = {r["bucket"]: r["last"]["input_hash"] for r in rows}
+    return latest, max((r["last"]["batch"] for r in rows), default=0)
+
+
+def _pending(hashes: dict[int, int], latest: dict[int, int]) -> list[int]:
+    """Buckets of ``hashes`` ({bucket: input_hash}) absent from the
+    manifest, or whose input_hash differs from their latest manifest row."""
+    return sorted(b for b, h in hashes.items() if latest.get(b) != h)
 
 
 def pending_buckets(
     spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
 ) -> list[int]:
     """Buckets not yet present in the manifest (or whose input changed) —
-    the resume anti-join (J8 / src/scripts/extract_unprocessed.py:20-45)."""
+    the resume set difference (J8 / src/scripts/extract_unprocessed.py:20-45),
+    taken on the driver. Only the hash column is computed: the distinct
+    conversation count is pruned from the fingerprint aggregate."""
+    fp = bucket_fingerprints(transcripts, n_buckets)
     return _pending(
-        spark, bucket_fingerprints(transcripts, n_buckets), out_dir
+        dict(fp.select("part_bucket", "input_hash").collect()),
+        _recorded(spark, out_dir)[0],
     )
+
+
+def _in_buckets(buckets: list[int]) -> Column:
+    """``part_bucket IN (buckets)`` as one parsed expression. The same
+    predicate from ``Column.isin`` costs one gateway call per literal,
+    about 0.06 s of driver time for 256 buckets."""
+    return F.expr(f"part_bucket IN ({', '.join(map(str, buckets))})")
+
+
+def _append_rows(
+    spark: SparkSession, rows: list[tuple], schema: str, path: str
+) -> None:
+    """Append driver-side rows to the parquet table at ``path`` as one
+    file. The rows go through pandas, which a session with Arrow enabled
+    ships as one Arrow batch: for 256 manifest rows on a 4-core box that
+    write takes about 0.08 s, against 0.3 s from a list of tuples."""
+    cols = [c.split()[0] for c in schema.split(", ")]
+    spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)\
+        .coalesce(1).write.mode("append").parquet(path)
 
 
 def run_with_manifests(
@@ -113,8 +171,16 @@ def run_with_manifests(
     send a hot bucket to one reducer, whereas the rebalance lets AQE split
     a skewed bucket into several files. Without the clustering every
     write task would open a file in every bucket it saw: tasks × buckets
-    small files. The transcripts are fingerprinted once per call; that
-    one result drives both the resume anti-join and the manifest rows.
+    small files.
+
+    Resume is planned on the driver. The per-bucket fingerprints (one
+    scan of the transcripts) and the latest manifest row per bucket are
+    collected, both at most n_buckets rows; the pending buckets are those
+    whose fingerprint hash differs from their latest row. After the
+    write, the per-bucket triple counts are collected from the written
+    files and the manifest rows (tagged with the next ``batch`` number)
+    are built from those fingerprints and counts, so the transcripts are
+    scanned for fingerprints once per call.
 
     ``zone_map_cols``: when set, ``sources.zonemaps.refresh_zone_maps``
     runs after the bucket write, statting ONLY the files this run added
@@ -136,11 +202,12 @@ def run_with_manifests(
     if snap:
         from xwikire_spark.sources import snapshots as snapmod
     triples_root = os.path.join(out_dir, "triples")
-    # n_buckets rows: materialized once, read by the anti-join below and
-    # by the manifest rows after the write — without it the second use
-    # re-scans and re-aggregates the transcripts
-    fp = bucket_fingerprints(transcripts, n_buckets).localCheckpoint()
-    todo = _pending(spark, fp, out_dir)
+    fps = {
+        r["part_bucket"]: r
+        for r in bucket_fingerprints(transcripts, n_buckets).collect()
+    }
+    latest, last_batch = _recorded(spark, out_dir)
+    todo = _pending({b: r["input_hash"] for b, r in fps.items()}, latest)
     if not todo:
         if snap:
             return snapmod.read_table(spark, triples_root)
@@ -149,9 +216,8 @@ def run_with_manifests(
     from pyspark.sql import Observation
 
     t0 = time.time()
-    subset = with_bucket(transcripts, n_buckets).where(
-        F.col("part_bucket").isin(todo)
-    )
+    in_todo = _in_buckets(todo)
+    subset = with_bucket(transcripts, n_buckets).where(in_todo)
     triples = build_fn(subset.drop("part_bucket"))
     out = with_bucket(triples, n_buckets)
     # quality metrics ride the WRITE job itself via observe() — zero
@@ -195,9 +261,11 @@ def run_with_manifests(
     metrics = {k: (0 if v is None else v) for k, v in dict(obs.get).items()}
     metrics["wall_ms"] = wall_ms
     metrics["n_buckets_processed"] = len(todo)
-    metrics_schema = ", ".join(f"{k} bigint" for k in metrics)
-    spark.createDataFrame([tuple(metrics.values())], metrics_schema)\
-        .write.mode("append").parquet(os.path.join(out_dir, "_metrics"))
+    _append_rows(
+        spark, [tuple(metrics.values())],
+        ", ".join(f"{k} bigint" for k in metrics),
+        os.path.join(out_dir, "_metrics"),
+    )
 
     # count from the just-written files, NOT the build DataFrame —
     # re-aggregating `out` would recompute the whole extraction
@@ -208,25 +276,16 @@ def run_with_manifests(
         written = snapmod.read_table(spark, triples_root, partitions=todo)
     else:
         table = spark.read.parquet(triples_root)
-        written = table.where(F.col("part_bucket").isin(todo))
-    counts = (
-        written
-        .groupBy(F.col("part_bucket").cast("bigint").alias("part_bucket"))
-        .agg(F.count(F.lit(1)).alias("triples_out"))
+        written = table.where(in_todo)
+    counts = dict(
+        written.groupBy(F.col("part_bucket").cast("bigint")).count().collect()
     )
-    manifest_rows = (
-        fp.where(F.col("part_bucket").isin(todo))
-        .join(counts, "part_bucket", "left")
-        .select(
-            F.col("part_bucket").alias("bucket"),
-            "convs_in",
-            "rows_in",
-            F.coalesce("triples_out", F.lit(0)).alias("triples_out"),
-            "input_hash",
-            F.lit(wall_ms).alias("wall_ms"),
-        )
-    )
-    manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
+    manifest_rows = [
+        (b, fps[b]["convs_in"], fps[b]["rows_in"], counts.get(b, 0),
+         fps[b]["input_hash"], wall_ms, last_batch + 1)
+        for b in todo
+    ]
+    _append_rows(spark, manifest_rows, MANIFEST_SCHEMA, _manifest_path(out_dir))
 
     if zone_map_cols:
         from xwikire_spark.sources.zonemaps import refresh_zone_maps

@@ -12,6 +12,13 @@ scheduler. Every knob here exists to keep the 100 TB plan healthy:
 - UTC session timezone — deterministic timestamps across executors/oracles.
 - shuffle partitions default to 2x cores locally; on a real cluster this is
   overridden via spark-submit --conf (AQE coalesces the excess anyway).
+- parallel file listing is capped at the same shuffle-partition count
+  (``spark.sql.sources.parallelPartitionDiscovery.parallelism``; Spark's
+  default of 10000 gives one task per directory): reading a table with
+  more than 32 partition directories lists them in at most that many
+  tasks, e.g. 32 instead of 256 for the 256-bucket triple table. The cap
+  is cluster-safe: it equals the parallelism the session already gives
+  every shuffle, and any directory count still lists in one job.
 """
 
 from __future__ import annotations
@@ -50,6 +57,10 @@ def get_spark(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(shuffle_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
